@@ -257,8 +257,12 @@ def lookup_points_fused(
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(bt)
 
+    # a pandas frame plans as a LocalTableScan; a Python list would plan
+    # as a Python RDD scan and run Python tasks just to ship the keys
+    keys = np.array(list(bt) or [(-1, -1)], dtype=np.int32).reshape(-1, 2)
     keys_df = spark.createDataFrame(
-        [(k[0], k[1]) for k in bt] or [(-1, -1)], "tile_row int, tile_col int"
+        pd.DataFrame({"tile_row": keys[:, 0], "tile_col": keys[:, 1]}),
+        "tile_row int, tile_col int",
     )
     pruned = images.join(F.broadcast(keys_df), ["tile_row", "tile_col"], "left_semi")
 

@@ -1682,7 +1682,7 @@ def kernel_offsets(kernel: str, a: int = 3) -> tuple:
     return _kernel_offsets_wfun(kernel, a)[0]
 
 
-def _bucket_agg(binned: DataFrame, how: str) -> DataFrame:
+def _bucket_agg(binned: DataFrame, how: str, in_grid: str | None = None) -> DataFrame:
     """Shared per-target-cell aggregate for the GDAL average-family
     warp (average/sum/min/max/count/mode/rms/med/q1/q3 — the complete
     gdalwarp -r aggregate family): `binned` holds
@@ -1690,11 +1690,19 @@ def _bucket_agg(binned: DataFrame, how: str) -> DataFrame:
     One grouped aggregate; map-side partials make it shuffle-light.
     mode uses a two-level count + max_by with a smallest-value
     tie-break (deterministic, unlike F.mode). Only non-empty target
-    cells are emitted (GDAL leaves the rest nodata)."""
+    cells are emitted (GDAL leaves the rest nodata). `in_grid` names
+    a boolean column of binned: groups where it never holds are
+    dropped after the (first) aggregate, where no filter can be pushed
+    back down into the projections that computed it."""
+    flag = [F.max(in_grid).alias(in_grid)] if in_grid else []
+
+    def in_grid_only(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(in_grid)).drop(in_grid) if in_grid else df
+
     if how == "mode":
-        per_val = binned.groupBy("trow", "tcol", "value").agg(
-            F.count(F.lit(1)).alias("cnt")
-        )
+        per_val = in_grid_only(binned.groupBy("trow", "tcol", "value").agg(
+            F.count(F.lit(1)).alias("cnt"), *flag
+        ))
         return per_val.groupBy("trow", "tcol").agg(
             F.expr("max_by(value, struct(cnt, -value))").alias("value"),
             F.sum("cnt").cast("long").alias("n_contrib"),
@@ -1717,10 +1725,11 @@ def _bucket_agg(binned: DataFrame, how: str) -> DataFrame:
     }
     if how not in aggs:
         raise ValueError(f"unknown resampling aggregate {how!r}")
-    return binned.groupBy("trow", "tcol").agg(
+    return in_grid_only(binned.groupBy("trow", "tcol").agg(
         aggs[how].alias("value"),
         F.count("value").cast("long").alias("n_contrib"),
-    )
+        *flag,
+    ))
 
 
 def wgs84_to_cea_grid_cubic(
@@ -3032,13 +3041,19 @@ def reproject_any(
             F.round((F.col("_Y") - F.lit(Y1b)) / F.lit(tcy), _Q)).cast("long")
         tcol_b = F.floor(
             F.round((F.col("_X") - F.lit(X0)) / F.lit(tcx), _Q)).cast("long")
-        binned = b2.select(
-            trow_b.alias("trow"), tcol_b.alias("tcol"), "value"
-        ).filter(
-            (F.col("trow") >= 0) & (F.col("trow") < th)
-            & (F.col("tcol") >= 0) & (F.col("tcol") < tw)
-        )
-        return _bucket_agg(binned, agg)
+        b3 = b2.select(trow_b.alias("trow"), tcol_b.alias("tcol"), "value")
+        in_grid = ((F.col("trow") >= 0) & (F.col("trow") < th)
+                   & (F.col("tcol") >= 0) & (F.col("tcol") < tw))
+        # out-of-grid rows share one (-1, -1) group that _bucket_agg
+        # drops on its aggregated flag. A row filter here would be pushed
+        # below the staged projections with the composed transform
+        # inlined into it once per reference (15 MB of plan text for a
+        # datum'd TM target, which exhausted an 8 GB driver heap)
+        binned = b3.select(
+            F.when(in_grid, F.col("trow")).otherwise(F.lit(-1)).alias("trow"),
+            F.when(in_grid, F.col("tcol")).otherwise(F.lit(-1)).alias("tcol"),
+            "value", in_grid.alias("_in_grid"))
+        return _bucket_agg(binned, agg, in_grid="_in_grid")
     if resampling != "nearest":
         raise NotImplementedError(
             f"resampling {resampling!r} not supported (have nearest/bilinear/"

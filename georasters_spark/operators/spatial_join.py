@@ -422,7 +422,9 @@ def clip(
         # output (georasters.py:894-898): broadcast the tiny attr table
         spark = images.sparkSession
         attrs = spark.createDataFrame(
-            [(int(z.zone_id), z.name) for z in zones], "zone_id long, zone_name string"
+            pd.DataFrame({"zone_id": np.array([z.zone_id for z in zones], dtype=np.int64),
+                          "zone_name": [z.name for z in zones]}),
+            "zone_id long, zone_name string",
         )
         out = out.join(F.broadcast(attrs), "zone_id", "left")
     return out
@@ -689,7 +691,8 @@ def rasterize(spark, zones, origin: tuple[float, float],
             f"rasterize: burn map missing zone ids {sorted(missing)} — "
             "cells won by an unmapped zone would silently vanish")
     bdf = spark.createDataFrame(
-        [(int(z), float(v)) for z, v in burn.items()],
+        pd.DataFrame({"zone_id": np.array(list(burn), dtype=np.int64),
+                      "value": np.array(list(burn.values()), dtype=np.float64)}),
         "zone_id long, value double")
     return won.join(F.broadcast(bdf), "zone_id").select(
         "row", "col", "zone_id", "value")
